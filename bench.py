@@ -294,10 +294,10 @@ def main() -> None:
         t0 = time.perf_counter()
         dedup_ops.build_dedup_index(existing, idx)
         result["dedup_index_build_sec"] = round(time.perf_counter() - t0, 3)
-        dedup_ops.dedup_incremental_indexed(new_batch, existing, idx).count()
+        dedup_ops.dedup_incremental(new_batch, existing, index_path=idx).count()
         queries["dedup_incremental_indexed"] = _timed_median(
-            lambda: dedup_ops.dedup_incremental_indexed(
-                new_batch, existing, idx
+            lambda: dedup_ops.dedup_incremental(
+                new_batch, existing, index_path=idx
             ).collect(),
             query_walls,
             "dedup_incremental_indexed",

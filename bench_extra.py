@@ -3,9 +3,10 @@
 
 bench.py is FROZEN for driver measurement; this file is the working
 bench: it times any subset of contract queries (and the extra bench
-lines) with the same warm + median-of-3 protocol, optionally through
-the noop sink (guide §1.4) so the computation is timed without the
-collect, and dumps `.explain("formatted")` plans to plans/r06/.
+lines) with the same warm + trimmed-median protocol
+(bench._timed_median), optionally through the noop sink (guide §1.4)
+so the computation is timed without the collect, and dumps
+`.explain("formatted")` plans to plans/r06/.
 
 Usage:
   python bench_extra.py time   q1 q2 ...      # default: the heavy set
@@ -22,13 +23,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-REPS = int(os.environ.get("CVOCR_BENCH_QUERY_REPS", "3"))
 NOOP = os.environ.get("CVOCR_NOOP", "0") == "1"
 TAG = os.environ.get("CVOCR_PLAN_TAG", "before")
 
@@ -69,6 +68,7 @@ def _extra_queries(spark):
 
 
 def main() -> None:
+    from bench import _timed_median
     from cvocr_spark.contract import build_contract
 
     mode = sys.argv[1] if len(sys.argv) > 1 else "time"
@@ -98,20 +98,15 @@ def main() -> None:
         spark.sparkContext.setJobDescription(f"bench_extra: {name}")
         if NOOP:
             fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()  # warm
+
+            def run():
+                fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
         else:
             fn(spark, SF_DIR).count()  # warm (bench.py protocol)
-        ts = []
-        for _ in range(REPS):
-            t0 = time.perf_counter()
-            if NOOP:
-                fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            else:
+
+            def run():
                 fn(spark, SF_DIR).collect()
-            ts.append(time.perf_counter() - t0)
-        walls[name] = [round(t, 3) for t in ts]
-        s = sorted(ts)
-        kept = [t for t in s if t <= 1.5 * s[0]]
-        meds[name] = round(kept[(len(kept) - 1) // 2], 3)
+        meds[name] = _timed_median(run, walls, name)
         print(f"{name}: {meds[name]} {walls[name]}", flush=True)
         spark.sparkContext.setJobDescription(None)
     print(json.dumps({"medians": meds, "walls": walls, "noop": NOOP, "sf": SF_DIR}))

@@ -335,8 +335,8 @@ def build_contract() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame]
     c["minhash_lsh_pairs_k128"] = (
         # production banding: 16 bands x 8 rows over k=128 signatures —
         # the S-curve config a template-heavy crawl needs (soak_dedup.py)
-        lambda s, d: dedup.minhash_lsh_pairs_wide(
-            dedup.with_injected_dups(_t(s, d, "documents"))
+        lambda s, d: dedup.minhash_lsh_pairs(
+            dedup.with_injected_dups(_t(s, d, "documents")), wide=True
         ),
         dedup.minhash_lsh_pairs_wide_sql(corpus=dedup.injected_dups_sql()),
     )

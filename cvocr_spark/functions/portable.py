@@ -290,11 +290,3 @@ def lsh_planes(n_planes: int, dim: int, seed: str = "lshplane") -> list[list[flo
             row.append(round(v / 1000.0 - 1.0, 3))  # [-1, 1], exact 3-dp literal
         planes.append(row)
     return planes
-
-
-def plane_literal_spark(row: list[float]) -> str:
-    return "array(" + ", ".join(f"cast({v!r} as double)" for v in row) + ")"
-
-
-def plane_literal_duck(row: list[float]) -> str:
-    return "[" + ", ".join(f"cast({v!r} as double)" for v in row) + "]"

@@ -27,9 +27,18 @@ an exact DuckDB oracle.  Scale design:
     of the reference's union-find region grouping
     (ergroup.cpp:47-64 merge loop, ergroup.cpp:163-171 find/compress).
     Pairs alone don't dedup a corpus; keepers do.
-  * simhash          — per-row 16-bit signature for the oracle-exact
-    demo; the production-width 64-bit variant with Hamming bucketing
-    lives in simhash64.py.
+
+One Spark core serves every near-dup entry point: ``_banded`` is the
+only banding function (4x2 demo layout or 16x8 production layout) and
+``_candidates`` the only band equi-join.  Each entry point takes a
+BAND SOURCE instead of forking per source — bands derived in-plan from
+the docs, a raw band frame the caller supplies (``bands=``,
+``new_bands=``/``existing_bands=``), or a stored index
+(``index_bands`` / ``index_path=``).  Band tables are RAW at rest and
+hot-bucket-guarded at probe time, because a bucket can be hot only
+across the whole accumulated side; the guard is idempotent, so a band
+table written already guarded probes unchanged.  The 64-bit SimHash
+near-dup operator lives in simhash64.py.
 
 For a non-trivial fixture on synthetic data (which has no natural
 dups), `with_injected_dups` unions in exact copies with doc_id+offset —
@@ -40,12 +49,11 @@ resolution has >2-member components to collapse.
 
 from __future__ import annotations
 
-import os
 import re
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import portable as P
@@ -141,16 +149,23 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     return _minhash_sigs_flat(docs, MINHASH_K, off2=15, width=14)
 
 
-def _banded(docs: DataFrame) -> DataFrame:
-    sigs = minhash_signatures(docs)
-    band_cols = []
-    for b in range(BANDS):
-        band_cols.append(
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.concat_ws("_", f"mh{2 * b}", f"mh{2 * b + 1}").alias("band_val"),
-            )
+def _banded(docs: DataFrame, wide: bool = False) -> DataFrame:
+    """RAW (doc_id, band_id, band_val) band rows, unguarded: the k=8
+    4x2 layout, or with ``wide=True`` the production k=128 16x8 layout
+    (see the production-width section below)."""
+    if wide:
+        sigs, n_bands, rows = minhash_signatures_wide(docs), WIDE_BANDS, WIDE_ROWS
+    else:
+        sigs, n_bands, rows = minhash_signatures(docs), BANDS, MINHASH_K // BANDS
+    band_cols = [
+        F.struct(
+            F.lit(b).alias("band_id"),
+            F.concat_ws("_", *[f"mh{b * rows + r}" for r in range(rows)]).alias(
+                "band_val"
+            ),
         )
+        for b in range(n_bands)
+    ]
     return sigs.select(
         "doc_id", F.explode(F.array(*band_cols)).alias("band")
     ).select("doc_id", "band.band_id", "band.band_val")
@@ -171,7 +186,10 @@ def _safe_banded(banded: DataFrame, max_bucket: int) -> DataFrame:
     it across the join's two sides), and skew behavior is identical —
     either form hashes a monster bucket's rows to one task before
     dropping them.  Measured at sf0.1: dedup_clusters 12.0s -> see
-    BENCH notes (the guard was the dominant re-evaluation)."""
+    BENCH notes (the guard was the dominant re-evaluation).
+
+    Idempotent: a bucket survives whole or not at all, so guarding
+    already-guarded rows at the same ``max_bucket`` drops nothing."""
     w = F.count("*").over(Window.partitionBy("band_id", "band_val"))
     return (
         banded.withColumn("bucket_n", w)
@@ -180,25 +198,41 @@ def _safe_banded(banded: DataFrame, max_bucket: int) -> DataFrame:
     )
 
 
-def minhash_lsh_pairs(docs: DataFrame, max_bucket: int = MAX_BUCKET) -> DataFrame:
-    """Band the signatures (2 rows/band) and equi-join on band value:
-    candidate near-dup pairs without a cross product.  Buckets larger
-    than ``max_bucket`` are DROPPED before the self-join (hot-bucket
-    guard): a degenerate band value (10k identical boilerplate docs)
-    would otherwise produce a single O(n^2) task at crawl scale.
-    Skipped buckets are observable via ``lsh_skipped_buckets``."""
-    safe = _safe_banded(_banded(docs), max_bucket)
-    a, b = safe.alias("a"), safe.alias("b")
+def _candidates(
+    bands: DataFrame, probe: DataFrame | None = None, max_bucket: int = MAX_BUCKET
+) -> DataFrame:
+    """The one band equi-join: distinct candidate pairs (a, b) of docs
+    sharing a band value, each side hot-bucket-guarded first.
+    ``probe=None`` self-joins ``bands`` with a < b; otherwise each
+    ``probe`` doc (a) is matched against the ``bands`` docs (b) — the
+    new-vs-existing probe of incremental dedup."""
+    safe = _safe_banded(bands, max_bucket)
+    a = safe if probe is None else _safe_banded(probe, max_bucket)
+    a, b = a.alias("a"), safe.alias("b")
+    cond = (F.col("a.band_id") == F.col("b.band_id")) & (
+        F.col("a.band_val") == F.col("b.band_val")
+    )
+    if probe is None:
+        cond = cond & (F.col("a.doc_id") < F.col("b.doc_id"))
     return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        a.join(b, cond)
         .select(F.col("a.doc_id").alias("a"), F.col("b.doc_id").alias("b"))
         .distinct()
     )
+
+
+def minhash_lsh_pairs(
+    docs: DataFrame, max_bucket: int = MAX_BUCKET, wide: bool = False
+) -> DataFrame:
+    """Band the signatures and equi-join on band value: candidate
+    near-dup pairs without a cross product.  Buckets larger than
+    ``max_bucket`` are DROPPED before the self-join (hot-bucket guard):
+    a degenerate band value (10k identical boilerplate docs) would
+    otherwise produce a single O(n^2) task at crawl scale.  Skipped
+    buckets are observable via ``lsh_skipped_buckets``.  ``wide=True``
+    bands at production width (k=128, 16 bands x 8 rows; 52-bit
+    double-hash halves, see functions/portable.py wide scheme)."""
+    return _candidates(_banded(docs, wide), max_bucket=max_bucket)
 
 
 def lsh_skipped_buckets(docs: DataFrame, max_bucket: int = MAX_BUCKET) -> DataFrame:
@@ -238,10 +272,6 @@ def _lsh_pairs_ctes(corpus: str, max_bucket: int = MAX_BUCKET) -> str:
     )"""
 
 
-def minhash_lsh_pairs_sql(corpus: str = "documents", max_bucket: int = MAX_BUCKET) -> str:
-    return f"WITH {_lsh_pairs_ctes(corpus, max_bucket)}\n    SELECT a, b FROM lsh_pairs"
-
-
 # -- production-width banding: k=128, 16 bands x 8 rows ----------------------
 # The k=8/4x2 config above is the oracle-friendly demo; its per-band
 # collision prob s^2 admits ~30% false candidates at s=0.3 and, on
@@ -258,44 +288,6 @@ WIDE_ROWS = 8
 def minhash_signatures_wide(docs: DataFrame) -> DataFrame:
     """k=128 minhashes (52-bit halves, h1 + 127*h2 < 2^59)."""
     return _minhash_sigs_flat(docs, P.MINHASH_WIDE_K, off2=14, width=13)
-
-
-def _banded_wide(docs: DataFrame) -> DataFrame:
-    """(doc_id, band_id, band_val) at production width (k=128, 16x8) —
-    shared by the self-join pair pipeline and the cross-batch probe
-    (dedup_incremental_pairs)."""
-    sigs = minhash_signatures_wide(docs)
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.concat_ws(
-                "_", *[f"mh{b * WIDE_ROWS + r}" for r in range(WIDE_ROWS)]
-            ).alias("band_val"),
-        )
-        for b in range(WIDE_BANDS)
-    ]
-    return sigs.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("band")
-    ).select("doc_id", "band.band_id", "band.band_val")
-
-
-def minhash_lsh_pairs_wide(
-    docs: DataFrame, max_bucket: int = MAX_BUCKET
-) -> DataFrame:
-    """Candidate pairs from k=128 minhash, 16 bands x 8 rows (52-bit
-    double-hash halves; see functions/portable.py wide scheme)."""
-    safe = _safe_banded(_banded_wide(docs), max_bucket)
-    a, b = safe.alias("a"), safe.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a"), F.col("b.doc_id").alias("b"))
-        .distinct()
-    )
 
 
 def minhash_lsh_pairs_wide_sql(
@@ -374,11 +366,25 @@ def verify_pairs_jaccard(
     )
 
 
-def minhash_verified_dups(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
+def minhash_verified_dups(
+    docs: DataFrame,
+    threshold: float = 0.8,
+    max_bucket: int = MAX_BUCKET,
+    bands: DataFrame | None = None,
+) -> DataFrame:
     """The full near-dup pipeline: LSH candidates -> exact Jaccard
     verification (the n-gram Jaccard capability, applied where it is
-    linear: after candidate generation)."""
-    return verify_pairs_jaccard(minhash_lsh_pairs(docs), docs, threshold)
+    linear: after candidate generation).
+
+    ``bands``: a precomputed RAW band frame of ``docs`` (the
+    ``_banded(docs)`` rows, e.g. a stored band table or
+    ``index_bands``) used instead of re-deriving the signature
+    pipeline in-plan.  The guard, self-join and verify are the same, so
+    pairs are identical whenever ``bands`` equals ``_banded(docs)``."""
+    cand = _candidates(
+        _banded(docs) if bands is None else bands, max_bucket=max_bucket
+    )
+    return verify_pairs_jaccard(cand, docs, threshold)
 
 
 def minhash_verified_dups_sql(corpus: str = "documents", threshold: float = 0.8) -> str:
@@ -420,22 +426,31 @@ def connected_components(
 _STATS_CLAMP_EVERY = 4
 
 
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path, jvm) for ``path`` through the Hadoop FS API,
+    so state probes work on whatever filesystem the path names (local,
+    ``file://``, ``hdfs://``, object stores) — a local os.listdir
+    silently sees nothing on a non-local URI."""
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
+
+
 def _completed_clamp_rounds(path: str) -> list[int]:
     """Round numbers with a complete ``round_<k>`` parquet frame
     (``_SUCCESS`` marker present — a kill mid-write leaves none, so a
-    torn frame is never resumed from).  Driver-visible paths only
-    (local FS / NFS); an object-store checkpoint_dir would need the
-    Hadoop FS listing instead."""
-    try:
-        names = os.listdir(path)
-    except OSError:
+    torn frame is never resumed from), listed through the Hadoop FS
+    API of the active session."""
+    fs, p, jvm = _hadoop_fs(SparkSession.active(), path)
+    if not fs.exists(p):
         return []
     out = []
-    for n in names:
+    for st in fs.listStatus(p):
+        n = st.getPath().getName()
         m = re.fullmatch(r"round_(\d+)", n)
-        if m and os.path.exists(os.path.join(path, n, "_SUCCESS")):
+        if m and fs.exists(jvm.org.apache.hadoop.fs.Path(f"{path}/{n}/_SUCCESS")):
             out.append(int(m.group(1)))
-    return out
+    return sorted(out)
 
 
 def _connected_components_rounds(
@@ -817,6 +832,7 @@ def dedup_incremental(
     existing: DataFrame,
     threshold: float = 0.8,
     max_bucket: int = MAX_BUCKET,
+    index_path: str | None = None,
 ) -> DataFrame:
     """Dedup a NEW batch against an EXISTING corpus — the growing-crawl
     shape (reference analogue: the one-doc-at-a-time ingest path,
@@ -829,22 +845,72 @@ def dedup_incremental(
       phase 2 (near):   band the REMAINING new docs' minhash signatures
         and equi-join against the existing band table (both sides
         hot-bucket-guarded), then exact-Jaccard-verify each candidate
-        pair; matches >= threshold -> 'dup_near', matched_keeper = min
-        verified existing doc_id.
+        pair (``dedup_incremental_pairs``); matches >= threshold ->
+        'dup_near', matched_keeper = min verified existing doc_id.
       else              -> 'new_keeper', matched_keeper NULL.
 
     Decisions are per-new-doc vs EXISTING only; intra-batch dups are
     resolved by running the batch operators on the survivors (the two
-    stages compose).  doc_id spaces must be disjoint.  At scale the
-    existing side's hash/band tables are precomputed artifacts of past
-    runs (the band table IS the stored LSH index); here they derive
-    in-plan from `existing` so the DuckDB oracle can restate them.
+    stages compose).  doc_id spaces must be disjoint.
+
+    The existing side's hash and band tables derive in-plan from
+    ``existing`` (so the DuckDB oracle can restate them), or, with
+    ``index_path``, are read from the index ``build_dedup_index`` wrote
+    — the stored-index serve path that skips the corpus-side signature
+    recompute.  ``existing`` is still read for the verify-phase text
+    lookups (see build_dedup_index).  Decisions are identical either
+    way (asserted in tests/test_dedup.py).
 
     Returns (doc_id, status, matched_keeper) for every new doc.
     """
-    ex_hash = _exact_hash_table(existing)
-    eb = _safe_banded(_banded(existing), max_bucket)
-    return _incremental_decide(new_docs, existing, ex_hash, eb, threshold, max_bucket)
+    if index_path is None:
+        ex_hash, eb = _exact_hash_table(existing), _banded(existing)
+    else:
+        spark = new_docs.sparkSession
+        # explicit schema: an EMPTY index (fresh crawl's first batch)
+        # has no data files to infer from, and probing one must degrade
+        # to all-new_keeper, not fail
+        ex_hash = spark.read.schema("h string, matched_keeper bigint").parquet(
+            f"{index_path}/exact_hash"
+        )
+        eb = index_bands(spark, index_path)
+    h = F.concat(F.length("text").cast("string"), F.lit(":"), F.md5("text"))
+    nh = new_docs.select("doc_id", "text", h.alias("h"))
+    exact = nh.join(ex_hash, "h").select(
+        "doc_id", F.lit("dup_exact").alias("status"), "matched_keeper"
+    )
+    # rest feeds THREE consumers (band probe, verify-token corpus,
+    # new_keeper anti-join) — lazy localCheckpoint so the exact-phase
+    # anti-join over the batch runs once per action, not three times
+    # (r6; materialized by the caller's action, no extra job)
+    rest = (
+        nh.join(ex_hash, "h", "left_anti")
+        .select("doc_id", "text")
+        .localCheckpoint(eager=False)
+    )
+    near = (
+        dedup_incremental_pairs(
+            rest,
+            existing,
+            threshold,
+            max_bucket,
+            new_bands=_banded(rest),
+            existing_bands=eb,
+        )
+        .groupBy("a")
+        .agg(F.min("b").alias("matched_keeper"))
+        .select(
+            F.col("a").alias("doc_id"),
+            F.lit("dup_near").alias("status"),
+            "matched_keeper",
+        )
+    )
+    new_keepers = rest.join(near, "doc_id", "left_anti").select(
+        "doc_id",
+        F.lit("new_keeper").alias("status"),
+        F.lit(None).cast("bigint").alias("matched_keeper"),
+    )
+    return exact.unionByName(near).unionByName(new_keepers)
 
 
 def _exact_hash_table(existing: DataFrame) -> DataFrame:
@@ -876,7 +942,7 @@ def dedup_incremental_pairs(
     ``connected_components_incremental`` — the composed growing-crawl
     dedup (soak_dedup.py incremental section).  Exact cross-batch
     copies surface here too: identical texts share every band and
-    verify at J = 1.0.  ``wide=True`` probes at production banding
+    verify at J = 1.0.  ``wide=True`` bands at production width
     (k=128, 16x8) to match the soak's pipeline config.
 
     CONTRACT: doc_ids must be globally unique across ``new_docs`` and
@@ -890,38 +956,29 @@ def dedup_incremental_pairs(
     on every batch to defend against a caller bug — documented
     instead.
 
-    ``existing_bands`` / ``new_bands`` (r6): RAW band frames
-    (doc_id, band_id, band_val — the ``_banded``/``_banded_wide``
-    output, UNguarded) substituted for the in-plan banding of that
-    side.  This is the stored-band-table serve path for a growing
-    corpus: the existing side's signature recompute — minhashing every
-    shingle of every doc ever ingested, the per-batch cost that grows
-    with corpus size — is replaced by a columnar scan of the stored
-    rows.  The hot-bucket guard still runs HERE, over the supplied
-    frame, because it must count buckets across the whole accumulated
-    side (guarding per batch at write time would miss buckets that are
-    hot only in aggregate) — so pairs are identical to the in-plan
-    form whenever the supplied bands equal that side's ``_banded``
-    output (banding is per-row, so a union of per-batch band frames IS
-    the banding of the union)."""
-    band = _banded_wide if wide else _banded
-    eb = _safe_banded(
-        existing_bands if existing_bands is not None else band(existing),
-        max_bucket,
-    )
-    nb = _safe_banded(
-        new_bands if new_bands is not None else band(new_docs), max_bucket
-    )
-    cand = (
-        nb.alias("n")
-        .join(
-            eb.alias("e"),
-            (F.col("n.band_id") == F.col("e.band_id"))
-            & (F.col("n.band_val") == F.col("e.band_val")),
-        )
-        .select(F.col("n.doc_id").alias("a"), F.col("e.doc_id").alias("b"))
-        .distinct()
-    )
+    ``existing_bands`` / ``new_bands`` (r6): RAW band frames (the
+    ``_banded`` rows of that side) substituted for the in-plan banding
+    of that side.  This is the stored-band-table serve path for a
+    growing corpus: the existing side's signature recompute —
+    minhashing every shingle of every doc ever ingested, the per-batch
+    cost that grows with corpus size — is replaced by a columnar scan
+    of the stored rows.  The hot-bucket guard still runs at probe time
+    (``_candidates``), over the supplied frame, because it must count
+    buckets across the whole accumulated side (guarding per batch at
+    write time would miss buckets that are hot only in aggregate) — so
+    pairs are identical to the in-plan form whenever the supplied bands
+    equal that side's ``_banded`` output (banding is per-row, so a
+    union of per-batch band frames IS the banding of the union).
+
+    Without ``new_bands`` the batch feeds two consumers (its bands and
+    the verify-token corpus), so it is lazily localCheckpointed and
+    evaluated once per action — the dedup_incremental pattern."""
+    if new_bands is None:
+        new_docs = new_docs.select("doc_id", "text").localCheckpoint(eager=False)
+        new_bands = _banded(new_docs, wide)
+    if existing_bands is None:
+        existing_bands = _banded(existing, wide)
+    cand = _candidates(existing_bands, probe=new_bands, max_bucket=max_bucket)
     corpus = new_docs.select("doc_id", "text").unionByName(
         existing.select("doc_id", "text")
     )
@@ -954,16 +1011,10 @@ def corpus_fingerprint(docs: DataFrame) -> str:
     return f"{r['n']}:{r['x']}"
 
 
-def _fingerprint_path(spark, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{path}/_FINGERPRINT")
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
-
-
 def dedup_index_fingerprint(spark, path: str) -> str | None:
     """The fingerprint recorded at build time, or None (pre-r6 index
     or torn build) — None never matches, forcing a rebuild."""
-    fs, p = _fingerprint_path(spark, path)
+    fs, p, _ = _hadoop_fs(spark, f"{path}/_FINGERPRINT")
     if not fs.exists(p):
         return None
     stream = fs.open(p)
@@ -978,9 +1029,7 @@ def dedup_index_fingerprint(spark, path: str) -> str | None:
         stream.close()
 
 
-def build_dedup_index(
-    existing: DataFrame, path: str, max_bucket: int = MAX_BUCKET
-) -> None:
+def build_dedup_index(existing: DataFrame, path: str) -> None:
     """Materialize the incremental-dedup index ONCE per corpus
     generation — the train/serve split for dedup (cf. the IVF index,
     ivf.py: build writes centroids + lists, search only probes).  Two
@@ -988,7 +1037,8 @@ def build_dedup_index(
 
       exact_hash/  (h, matched_keeper)            — phase-1 probe table
       bands/       (doc_id, band_id, band_val)    — the stored LSH
-                   index, hot-bucket-guarded, partitioned by band_id
+                   index, RAW (guarded at probe time, like every band
+                   table), partitioned by band_id
 
     Per-batch probing then skips the expensive corpus-side recompute
     (md5 + k minhashes over every shingle of the WHOLE corpus per
@@ -996,7 +1046,8 @@ def build_dedup_index(
     Verify-phase text lookups still read the corpus table itself:
     candidates are bounded by the LSH output, so that join is linear
     in candidates either way and duplicating every text into the
-    index would double corpus storage for nothing.
+    index would double corpus storage for nothing.  Indexes written
+    with already-guarded bands stay valid: the guard is idempotent.
 
     Terminal ``_BUILT`` marker (r5): cleared first, written only after
     BOTH artifacts land — the ivf.py torn-build rule, so
@@ -1014,153 +1065,24 @@ def build_dedup_index(
     _exact_hash_table(existing).write.mode("overwrite").parquet(
         f"{path}/exact_hash"
     )
-    _safe_banded(_banded(existing), max_bucket).write.mode("overwrite").partitionBy(
-        "band_id"
-    ).parquet(f"{path}/bands")
-    ffs, fp_path = _fingerprint_path(spark, path)
+    _banded(existing).write.mode("overwrite").partitionBy("band_id").parquet(
+        f"{path}/bands"
+    )
+    ffs, fp_path, _ = _hadoop_fs(spark, f"{path}/_FINGERPRINT")
     out = ffs.create(fp_path, True)
     out.write(bytearray(corpus_fingerprint(existing).encode("utf-8")))
     out.close()
     fs.create(marker, True).close()
 
 
-def minhash_verified_dups_banded(
-    docs: DataFrame,
-    bands: DataFrame,
-    threshold: float = 0.8,
-    max_bucket: int = MAX_BUCKET,
-) -> DataFrame:
-    """``minhash_verified_dups`` over a PRECOMPUTED raw band frame
-    (the ``_banded(docs)`` rows, e.g. read back from a stored band
-    table): the signature pipeline is not re-derived; the hot-bucket
-    guard, candidate self-join and exact-Jaccard verify are the same
-    tail as the in-plan form, so pairs are identical whenever ``bands``
-    equals ``_banded(docs)`` (r6 — the streaming cluster maintenance
-    serve path)."""
-    safe = _safe_banded(bands, max_bucket)
-    a, b = safe.alias("a"), safe.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a"), F.col("b.doc_id").alias("b"))
-        .distinct()
+def index_bands(spark: SparkSession, path: str) -> DataFrame:
+    """The stored band table of a ``build_dedup_index`` index — a band
+    source for ``minhash_verified_dups(bands=)``.  Explicit schema: an
+    EMPTY index (fresh crawl's first batch) has no data files to infer
+    from, and probing one must find no candidates, not fail."""
+    return spark.read.schema("doc_id bigint, band_val string, band_id int").parquet(
+        f"{path}/bands"
     )
-    return verify_pairs_jaccard(cand, docs, threshold)
-
-
-def minhash_verified_dups_indexed(
-    docs: DataFrame, index_path: str, threshold: float = 0.8
-) -> DataFrame:
-    """``minhash_verified_dups`` SERVED from a stored band table
-    (written by ``build_dedup_index`` over the SAME doc set): the
-    signature + banding recompute — the part that grows with corpus
-    size — is skipped entirely; the candidate self-join runs over the
-    stored (already hot-bucket-guarded) bands, and the Jaccard verify
-    reads ``docs`` for texts exactly as the in-plan form does.
-    PAIR-IDENTICAL to the in-plan form by construction (the stored
-    bands ARE _safe_banded(_banded(docs))); asserted in
-    tests/test_curate.py via byte-identical manifests."""
-    spark = docs.sparkSession
-    eb = spark.read.schema("doc_id bigint, band_val string, band_id int").parquet(
-        f"{index_path}/bands"
-    )
-    a, b = eb.alias("a"), eb.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a"), F.col("b.doc_id").alias("b"))
-        .distinct()
-    )
-    return verify_pairs_jaccard(cand, docs, threshold)
-
-
-def dedup_incremental_indexed(
-    new_docs: DataFrame,
-    existing: DataFrame,
-    index_path: str,
-    threshold: float = 0.8,
-    max_bucket: int = MAX_BUCKET,
-) -> DataFrame:
-    """``dedup_incremental`` probing the MATERIALIZED index written by
-    ``build_dedup_index`` instead of re-deriving the corpus-side hash
-    and band tables in-plan.  ``existing`` is still read for the
-    verify-phase text lookups (see build_dedup_index docstring).
-    Asserted equal to the in-plan variant on the contract fixture in
-    tests/test_dedup.py."""
-    spark = new_docs.sparkSession
-    # explicit schemas: an EMPTY index (fresh crawl's first batch) has
-    # no data files to infer from, and probing one must degrade to
-    # all-new_keeper, not fail
-    ex_hash = spark.read.schema("h string, matched_keeper bigint").parquet(
-        f"{index_path}/exact_hash"
-    )
-    eb = spark.read.schema("doc_id bigint, band_val string, band_id int").parquet(
-        f"{index_path}/bands"
-    )
-    return _incremental_decide(new_docs, existing, ex_hash, eb, threshold, max_bucket)
-
-
-def _incremental_decide(
-    new_docs: DataFrame,
-    existing: DataFrame,
-    ex_hash: DataFrame,
-    eb: DataFrame,
-    threshold: float,
-    max_bucket: int,
-) -> DataFrame:
-    """Shared decision core: phase-1 exact anti-join against ``ex_hash``,
-    phase-2 LSH probe of the new batch's bands against ``eb`` +
-    exact-Jaccard verify, else new_keeper."""
-    h = F.concat(F.length("text").cast("string"), F.lit(":"), F.md5("text"))
-    nh = new_docs.select("doc_id", "text", h.alias("h"))
-    exact = nh.join(ex_hash, "h").select(
-        "doc_id", F.lit("dup_exact").alias("status"), "matched_keeper"
-    )
-    # rest feeds THREE consumers (band probe, verify-token corpus,
-    # new_keeper anti-join) — lazy localCheckpoint so the exact-phase
-    # anti-join over the batch runs once per action, not three times
-    # (r6; materialized by the caller's action, no extra job)
-    rest = (
-        nh.join(ex_hash, "h", "left_anti")
-        .select("doc_id", "text")
-        .localCheckpoint(eager=False)
-    )
-    nb = _safe_banded(_banded(rest), max_bucket)
-    cand = (
-        nb.alias("n")
-        .join(
-            eb.alias("e"),
-            (F.col("n.band_id") == F.col("e.band_id"))
-            & (F.col("n.band_val") == F.col("e.band_val")),
-        )
-        .select(F.col("n.doc_id").alias("a"), F.col("e.doc_id").alias("b"))
-        .distinct()
-    )
-    corpus = rest.unionByName(existing.select("doc_id", "text"))
-    near = (
-        verify_pairs_jaccard(cand, corpus, threshold)
-        .groupBy("a")
-        .agg(F.min("b").alias("matched_keeper"))
-        .select(
-            F.col("a").alias("doc_id"),
-            F.lit("dup_near").alias("status"),
-            "matched_keeper",
-        )
-    )
-    new_keepers = rest.join(near, "doc_id", "left_anti").select(
-        "doc_id",
-        F.lit("new_keeper").alias("status"),
-        F.lit(None).cast("bigint").alias("matched_keeper"),
-    )
-    return exact.unionByName(near).unionByName(new_keepers)
 
 
 def incremental_split_sql(every: int = 4) -> tuple[str, str]:
@@ -1285,21 +1207,3 @@ def dedup_incremental_sql(
     UNION ALL SELECT doc_id, status, matched_keeper FROM near
     UNION ALL SELECT doc_id, status, matched_keeper FROM newk
     """
-
-
-# --------------------------------------------------------------------------
-# simhash (oracle-exact 16-bit demo; 64-bit production width in simhash64.py)
-# --------------------------------------------------------------------------
-
-
-def simhash_signatures(docs: DataFrame) -> DataFrame:
-    """16-bit SimHash per doc (bit-majority over salted word hashes)."""
-    words = P.words_spark("text")
-    return docs.select(
-        "doc_id", F.expr(P.simhash_spark(words)).alias("simhash")
-    )
-
-
-def simhash_signatures_sql(corpus: str = "documents") -> str:
-    words = P.words_duck("text")
-    return f"SELECT doc_id, {P.simhash_duck(words)} AS simhash FROM ({corpus})"

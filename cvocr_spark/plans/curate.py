@@ -65,7 +65,7 @@ def curate_corpus(
     eval set, scrub policy) skip the signature recompute, the part
     that grows with corpus size.  Manifests are byte-identical to the
     in-plan form (asserted in tests/test_curate.py): the stored bands
-    ARE the in-plan band table, guard included.
+    ARE the in-plan raw band table, guarded the same way at probe time.
 
     CACHING CONTRACT (ADVICE r4): the returned frame references a
     persisted intermediate (the quality survivors — three consumers).
@@ -127,8 +127,10 @@ def curate_corpus(
             or _dd.dedup_index_fingerprint(spark, dedup_index_path) != fp
         ):
             _dd.build_dedup_index(survivors, dedup_index_path)
-        pairs = _dd.minhash_verified_dups_indexed(
-            survivors, dedup_index_path, threshold=threshold
+        pairs = _dd.minhash_verified_dups(
+            survivors,
+            threshold=threshold,
+            bands=_dd.index_bands(spark, dedup_index_path),
         ).select("a", "b")
     else:
         pairs = _dd.minhash_verified_dups(survivors, threshold=threshold).select("a", "b")

@@ -45,12 +45,6 @@ from pyspark.sql import functions as F
 from ..operators import dedup
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
-
-
 def _complete_label_gens(spark: SparkSession, labels_dir: str) -> list[int]:
     """Batch ids with a complete label generation (_SUCCESS present).
     Listed through the Hadoop FS API (ADVICE r5: a driver-local
@@ -59,7 +53,7 @@ def _complete_label_gens(spark: SparkSession, labels_dir: str) -> list[int]:
     discarding prior generations).  Non-numeric ``gen_*`` suffixes (a
     stray gen_*.tmp left by tooling) are SKIPPED, not raised on — one
     junk directory must not take down every subsequent batch."""
-    fs, p, jvm = _hadoop_fs(spark, labels_dir)
+    fs, p, jvm = dedup._hadoop_fs(spark, labels_dir)
     if not fs.exists(p):
         return []
     out = []
@@ -152,8 +146,8 @@ def cluster_batch_writer(
                 .filter(F.col("batch_id") < batch_id)
                 .select("doc_id", "text")
             )
-            intra = dedup.minhash_verified_dups_banded(
-                batch, nb, threshold=threshold, max_bucket=max_bucket
+            intra = dedup.minhash_verified_dups(
+                batch, threshold=threshold, max_bucket=max_bucket, bands=nb
             ).select("a", "b")
             cross = dedup.dedup_incremental_pairs(
                 batch,
@@ -182,7 +176,7 @@ def cluster_batch_writer(
             if keep_gens is not None:
                 # delete through the Hadoop FS too — retention must
                 # work on whatever filesystem the state lives on
-                fs, _p, jvm = _hadoop_fs(spark, labels_dir)
+                fs, _p, jvm = dedup._hadoop_fs(spark, labels_dir)
                 done = _complete_label_gens(spark, labels_dir)
                 for g in done[:-keep_gens]:
                     fs.delete(

@@ -99,10 +99,10 @@ def incremental_section(spark, corpus, n_docs: int, oneshot_verified=None) -> di
         # (previously dedup_incremental_pairs re-minhashed the whole
         # accumulated corpus every batch: wall grew linearly in b).
         band_path = f"{workdir}/bands_{b}"
-        dedup._banded_wide(batch).write.mode("overwrite").parquet(band_path)
+        dedup._banded(batch, wide=True).write.mode("overwrite").parquet(band_path)
         nb_raw = spark.read.parquet(band_path)
-        intra = dedup.minhash_verified_dups_banded(
-            batch, nb_raw, threshold=THRESHOLD, max_bucket=MAX_BUCKET
+        intra = dedup.minhash_verified_dups(
+            batch, threshold=THRESHOLD, max_bucket=MAX_BUCKET, bands=nb_raw
         ).select("a", "b")
         if existing is None:
             new_pairs = intra
@@ -209,7 +209,7 @@ def main() -> None:
     n_docs = corpus.count()
 
     t0 = time.perf_counter()
-    cand = dedup.minhash_lsh_pairs_wide(corpus, max_bucket=MAX_BUCKET).persist()
+    cand = dedup.minhash_lsh_pairs(corpus, max_bucket=MAX_BUCKET, wide=True).persist()
     n_cand = cand.count()
     t_cand = time.perf_counter() - t0
 

@@ -122,6 +122,12 @@ def test_connected_components_stats_clamp_writes_resume_points(spark, tmp_path):
     torn.mkdir()
     (torn / "part-00000.parquet").write_bytes(b"torn")
     assert dedup._completed_clamp_rounds(ckpt) == [dedup._STATS_CLAMP_EVERY]
+    # the listing goes through the Hadoop FS API, so a URI-form
+    # checkpoint_dir (file://, hdfs://) resumes too instead of silently
+    # listing nothing and restarting from round 0
+    assert dedup._completed_clamp_rounds("file://" + ckpt) == [
+        dedup._STATS_CLAMP_EVERY
+    ]
     labels_df3, _ = dedup._connected_components_rounds(pairs, checkpoint_dir=ckpt)
     assert {r["node"]: r["label"] for r in labels_df3.collect()} == labels
 
@@ -186,7 +192,7 @@ def test_dedup_incremental_three_statuses(spark):
 
 def test_dedup_incremental_indexed_matches_inplan(spark, tmp_path):
     """The materialized-index probe (build_dedup_index ->
-    dedup_incremental_indexed) must reach the same (status,
+    dedup_incremental(index_path=)) must reach the same (status,
     matched_keeper) decision as the in-plan variant on the contract
     fixture, and its plan must read the stored band table instead of
     re-deriving the corpus-side minhash pipeline (the train/serve
@@ -198,7 +204,10 @@ def test_dedup_incremental_indexed_matches_inplan(spark, tmp_path):
     dedup.build_dedup_index(existing, idx)
 
     got = sorted(
-        map(tuple, dedup.dedup_incremental_indexed(new_batch, existing, idx).collect())
+        map(
+            tuple,
+            dedup.dedup_incremental(new_batch, existing, index_path=idx).collect(),
+        )
     )
     want = sorted(map(tuple, dedup.dedup_incremental(new_batch, existing).collect()))
     assert got == want and len(got) > 0
@@ -208,9 +217,44 @@ def test_dedup_incremental_indexed_matches_inplan(spark, tmp_path):
     # artifacts (existing untouched), every probe returns new_keeper
     empty_idx = str(tmp_path / "empty_index")
     dedup.build_dedup_index(existing.limit(0), empty_idx)
-    rows = dedup.dedup_incremental_indexed(new_batch, existing, empty_idx).collect()
+    rows = dedup.dedup_incremental(
+        new_batch, existing, index_path=empty_idx
+    ).collect()
     assert len(rows) == len(got)
     assert all(r["status"] == "new_keeper" for r in rows)
+
+
+def test_verified_dups_band_sources_agree_under_hot_bucket(spark, tmp_path):
+    """minhash_verified_dups returns identical pairs from all three
+    band sources — in-plan, a raw ``_banded`` frame, and a stored index
+    — on a corpus whose planted hot bucket exceeds ``max_bucket``.  The
+    index stores the hot rows RAW and the guard drops them at probe
+    time, exactly as the in-plan path does."""
+    max_bucket = 4
+    filler = [
+        (i, f"unique filler document number {i} about topic {i * 7} here")
+        for i in range(30)
+    ]
+    body = "a genuine duplicated article body with several distinct words"
+    dups = [(100, body), (101, body), (102, body + " extra")]
+    boiler = "identical boilerplate footer repeated on many crawled pages"
+    hot = [(200 + i, boiler) for i in range(max_bucket + 2)]
+    docs = _docs(spark, filler + dups + hot)
+
+    def pairs(**kw):
+        rows = dedup.minhash_verified_dups(docs, max_bucket=max_bucket, **kw)
+        return sorted(map(tuple, rows.collect()))
+
+    idx = str(tmp_path / "dedup_index")
+    dedup.build_dedup_index(docs, idx)
+    stored = dedup.index_bands(spark, idx)
+    assert stored.filter(F.col("doc_id") >= 200).count() == len(hot) * dedup.BANDS
+
+    inplan = pairs()
+    assert pairs(bands=dedup._banded(docs)) == inplan
+    assert pairs(bands=stored) == inplan
+    assert {(a, b) for a, b, _ in inplan} >= {(100, 101), (100, 102), (101, 102)}
+    assert not any(a >= 200 for a, _, _ in inplan), inplan
 
 
 def test_verify_pairs_jaccard_scores_candidates_only(spark):

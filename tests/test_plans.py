@@ -252,6 +252,22 @@ def test_dedup_incremental_plan_shape(spark):
     assert "LeftAnti" in plan, plan[:3000]
 
 
+def test_incremental_pairs_evaluates_new_batch_once(spark):
+    """dedup_incremental_pairs without stored ``new_bands`` feeds the
+    batch to two consumers (its bands and the verify-token corpus); the
+    batch projection must appear at most once in the optimized plan,
+    not once per consumer.  The near copies of incremental_split carry
+    the ``qqnearmarker`` concat, so a plan that re-derives the batch
+    for each consumer shows it more than once."""
+    from cvocr_spark.operators import dedup
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    existing, new_batch = dedup.incremental_split(docs)
+    df = dedup.dedup_incremental_pairs(new_batch, existing)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("qqnearmarker") <= 1, plan[:4000]
+
+
 def test_kmv_values_unchanged_by_partial_plan(spark):
     """Two-level k-smallest == global k-smallest: spot-check the kth
     hash against a driver-side sort of all hashes."""
